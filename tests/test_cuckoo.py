@@ -33,11 +33,13 @@ def keysets(spark):
 
 def test_cuckoo_antijoin_equals_exact(spark, keysets):
     seen, cand = keysets
-    got = sorted(
-        r["url"] for r in antijoin_cuckoo(cand, seen, "url", expected_items=5000).collect()
-    )
+    out = antijoin_cuckoo(cand, seen, "url", expected_items=5000)
+    got = sorted(r["url"] for r in out.collect())
     want = sorted(r["url"] for r in antijoin_exact(cand, seen, "url").collect())
     assert got == want and len(want) == 2500
+    # no probe pass: the executed (AQE final) plan runs no Python
+    final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert "EvalPython" not in final, final
 
 
 def test_cuckoo_no_false_negatives(spark, keysets):
@@ -53,6 +55,8 @@ def test_cuckoo_saturation_degrades_not_breaks(spark, keysets):
     # force overflow: capacity for ~64 keys, 5000 inserted
     filt = CuckooSeenSet.build(seen, "url", expected_items=64, n_shards=2)
     assert filt.saturated.any()
+    # saturated shards answer maybe-seen: still no false negatives
+    assert filt._probe_arrays(*spark_key_hasher(spark, seen, "url")).all()
     got = sorted(
         r["url"]
         for r in antijoin_cuckoo(
@@ -60,7 +64,7 @@ def test_cuckoo_saturation_degrades_not_breaks(spark, keysets):
         ).collect()
     )
     want = sorted(r["url"] for r in antijoin_exact(cand, seen, "url").collect())
-    assert got == want  # saturated shards route through the exact join
+    assert got == want
 
 
 def test_cuckoo_incremental_insert(spark, keysets):
@@ -99,6 +103,8 @@ def test_cuckoo_delete_reopens_keys_exactly(spark, keysets):
 
     # table-side purge too: the filter mirrors the table's delete
     seen_after = seen.join(purged, "url", "left_anti").persist()
+    # dirty buckets answer maybe-seen: no surviving key probes new
+    assert filt._probe_arrays(*spark_key_hasher(spark, seen_after, "url")).all()
     got = sorted(
         r["url"]
         for r in antijoin_cuckoo(

@@ -60,10 +60,11 @@ def test_bloom_antijoin_equals_exact(spark):
         [(f"k{i}",) for i in range(0, 2000, 3)], "image_id string"
     )
     exact = {r["image_id"] for r in antijoin_exact(cand, seen, "image_id").collect()}
-    bloom = {
-        r["image_id"]
-        for r in antijoin_bloom(cand, seen, "image_id", expected_items=700, n_shards=4).collect()
-    }
+    bloom_df = antijoin_bloom(cand, seen, "image_id", expected_items=700, n_shards=4)
+    bloom = {r["image_id"] for r in bloom_df.collect()}
+    # no probe pass: the executed (AQE final) plan runs no Python
+    final = bloom_df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert "EvalPython" not in final, final
     copart = {
         r["image_id"]
         for r in antijoin_copartitioned(cand, seen, "image_id", buckets=8).collect()

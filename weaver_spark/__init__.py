@@ -12,8 +12,8 @@ Chord-DHT JSON storage) as an idiomatic Spark engine:
   partitioning — the shuffle service IS the ring,
 - fetch + parse + image decode run as Arrow-vectorized ``mapInPandas``
   stages, never per-row Python,
-- the URL-seen set is an exact left-anti join with a sharded Bloom-filter
-  prefilter for 10^10-frontier scale,
+- the URL-seen set is an exact left-anti join, with a sharded Bloom (or
+  cuckoo) seen filter maintained beside it for 10^10-frontier scale,
 - politeness/robots/priority scheduling is pure window logic over salted
   host keys.
 

@@ -8,7 +8,7 @@ Each crawl round is one declarative DataFrame job (SURVEY.md §3.1
     batch    = politeness/priority schedule over pending (scale mode)
                or the whole FIFO wave (reproduction mode)
     results  = batch |> join(page source) |> mapInPandas(fetch+parse+decode)
-    links    -> canonicalize -> assign dense enqueue_seq -> frontier append
+    links    -> assign dense enqueue_seq (canonical from the fetch) -> frontier append
     payloads -> first-wins per key -> anti-join seen keys -> images append
     metrics  -> per (round, partition, host) aggregate   -> metrics append
     done     -> status updates for the batch              -> frontier append
@@ -23,7 +23,7 @@ Reproduction mode matches the reference semantics (SURVEY.md §0.1) and is
 asserted equal to the pure-Python simulator (sim.py) on crawl order,
 enqueue log, seen set and stored rows. Scale mode turns on the north-rule
 upgrades: per-host politeness budgets via skew-safe salted window rank,
-priority ordering, Bloom-prefiltered seen anti-join.
+priority ordering, persistent Bloom/cuckoo seen filters.
 
 Scale notes (10^10 frontier, 1000 executors):
 - No stage in the loop collects data: the only driver-side values are
@@ -78,16 +78,31 @@ from .webgen import SyntheticWeb
 
 
 @F.pandas_udf(StringType())
-def _canonicalize_udf(urls: pd.Series) -> pd.Series:
-    return canonicalize_series(urls)
-
-
-@F.pandas_udf(StringType())
 def _resolve_canonicalize_udf(parents: pd.Series, raws: pd.Series) -> pd.Series:
     return resolve_series(parents, raws)
 
 
 DEPTH_PRIORITY_CEIL = 4  # depth mode: priority = max(0, CEIL - depth)
+
+# Rows of pending frontier per SYNTHETIC fetch task. Every python-worker
+# task pays a fixed setup before it touches a row (PySpark resets the
+# import caches per task and re-reads pyspark.zip: measured ~0.3 s warm,
+# ~1 s cold on a 4-vCPU VM) while the synthetic fetch kernel costs
+# ~1.2 ms per row, so a task needs a few hundred rows before its work
+# outweighs its setup. The figure holds only for that kernel: HTTP rows
+# wait on the network, so the HTTP fetch stage keeps 4 x shuffle
+# partitions tasks of max_concurrency sockets each.
+FETCH_ROWS_PER_TASK = 256
+
+
+def fetch_task_count(n_pending: int, shuffle_partitions: int) -> int:
+    """Task count of a round's synthetic fetch stage: one task per
+    ``FETCH_ROWS_PER_TASK`` pending rows, at least one, and at most
+    4 x ``shuffle_partitions`` (waves of short tasks let the scheduler
+    re-balance stragglers on big rounds)."""
+    return min(
+        4 * shuffle_partitions, max(1, -(-n_pending // FETCH_ROWS_PER_TASK))
+    )
 
 
 def _priority_expr(kind_col, depth_col=None, mode: str = "kind"):
@@ -228,13 +243,16 @@ class CrawlEngine:
         """Register the synthetic closed web as the page source. The fetch
         UDF is rebuilt with the WEB's seed so payload bytes/phash always
         match the simulator oracle run on the same web."""
-        if web.seed != self.seed:
-            self.seed = web.seed
-            self._fetch_fn = make_synthetic_fetch_fn(self.k_cap, web.seed)
+        self.seed = web.seed
         df = self.spark.createDataFrame(web.page_rows(), WEB_PAGES_SCHEMA)
         self.set_web_df(df)
 
     def set_web_df(self, df: DataFrame) -> None:
+        """Register a page-source table and the synthetic fetch that
+        reads it. The two stay paired (set_http_fetcher drops both): the
+        round treats ``web_pages is not None`` as "the synthetic fetch
+        is installed", whose links arrive canonical."""
+        self._fetch_fn = make_synthetic_fetch_fn(self.k_cap, self.seed)
         self.web_pages = df.persist()
         self.web_pages.count()
 
@@ -1142,8 +1160,8 @@ class CrawlEngine:
             # merge trivially — BloomSeenSet.insert_df below). No
             # per-round seen count, no O(seen) rebuild; rebuilt only when
             # inserts outgrow the sized capacity (amortized doubling).
-            # Stale bits after rollback/purge are false positives only —
-            # the exact confirm is always authoritative.
+            # Stale bits after rollback/purge are false positives only;
+            # the anti-join itself is exact (antijoin_bloom).
             if self._bloom is not None and self._bloom.over_capacity:
                 self._bloom = None
             if self._bloom is None:
@@ -1186,8 +1204,8 @@ class CrawlEngine:
             # from the full seen set unless a shard saturates
             # (O(seen)-per-round rebuilds are the shape the 10^10 design
             # forbids). Rollbacks/external deletes only leave stale
-            # fingerprints = false positives = exact-confirm traffic,
-            # never a wrong result.
+            # fingerprints = false positives, never a wrong result (the
+            # anti-join itself is exact — antijoin_cuckoo).
             if self._cuckoo is not None and self._cuckoo.saturated.any():
                 self._cuckoo = None
             if self._cuckoo is None:
@@ -1229,8 +1247,7 @@ class CrawlEngine:
         if self.seen_filter in ("bloom", "cuckoo"):
             # the winners pipeline feeds both the fetch stage and the
             # filter-maintenance job — pin it so maintenance reuses the
-            # computed keys instead of re-running the firsts window +
-            # probe
+            # computed keys instead of re-running the firsts window
             winner_keys = winner_keys.persist()
         fetch_input = fetch_input.join(
             winner_keys.select("enqueue_seq").withColumn("_store", F.lit(True)),
@@ -1245,13 +1262,21 @@ class CrawlEngine:
         # explicit numPartitions repartition is exempt from AQE
         # coalescing. Keys: (host, salt(url)) spreads mega-hosts across
         # tasks while keeping per-host locality for connection reuse.
-        # 4x oversubscription: one task per core makes the stage's
-        # makespan the max over N core-long tasks — any straggler (skewed
-        # bucket, stolen CPU slice) idles its whole core to the end. 4
-        # waves of short tasks let the scheduler re-balance; per-task
-        # python-worker/arrow setup is milliseconds against multi-second
-        # tasks.
-        n_fetch_parts = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # The synthetic fetch's task count is sized by the round's
+        # pending rows, which head/carry already know (fetch_task_count):
+        # one task per FETCH_ROWS_PER_TASK rows, capped at 4 x shuffle
+        # partitions. Each python task pays ~0.3 s (warm) to ~1 s (cold)
+        # of worker setup against ~1.2 ms of kernel per row, so a small
+        # round runs in one task and a large one in 4 waves of short
+        # tasks. The HTTP fetch is network-bound, not setup-bound: it
+        # keeps 4 x shuffle partitions tasks, each with its own socket
+        # pool. The count is also the images table's file count for the
+        # round (catalog.adopt takes the stage's sink=p files verbatim).
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if pages is not None:
+            n_fetch_parts = fetch_task_count(n_pending, shuffle_parts)
+        else:
+            n_fetch_parts = 4 * shuffle_parts
         salt = F.pmod(F.xxhash64("url"), F.lit(self.salt_buckets))
         if DELAY_MS_COL in fetch_input.columns:
             # crawl-delayed hosts get a CONSTANT salt: all of a delayed
@@ -1505,9 +1530,11 @@ class CrawlEngine:
                     F.posexplode("links").alias("link_pos", "raw_url"),
                 )
                 if pages is not None:
-                    # synthetic webs emit absolute spellings
-                    links = links.withColumn("url", _canonicalize_udf(F.col("raw_url")))
-                    typed = links.join(pages.select("url", "kind"), "url", "left")
+                    # a page source pairs with the synthetic fetch
+                    # (set_web_df), which emits canonical links already
+                    typed = links.withColumnRenamed("raw_url", "url").join(
+                        pages.select("url", "kind"), "url", "left"
+                    )
                 else:
                     # http mode: hrefs may be relative — resolve vs parent;
                     # discovered links are typed by the URL classifier rules
@@ -1523,12 +1550,11 @@ class CrawlEngine:
                 ).withColumn("attempt", F.lit(0))
             if retry_rows is not None:
                 typed = retry_rows if typed is None else typed.unionByName(retry_rows)
-            # pin the links pipeline ONCE: dense_seq's range repartition
-            # executes its input twice (boundary sampling + the shuffle
-            # write), and this input carries the canonicalize pandas UDF
-            # — without the pin the UDF pass runs 2x per round (measured
-            # 24% of deep-crawl wall in dense_seq, BENCH/deep_stage_
-            # marks.txt). O(round links) memory, same order as seq_pin.
+            # pin the links pipeline ONCE: dense_seq_numeric executes its
+            # input twice (the per-bucket count + the consumer's job), and
+            # in http mode this input carries the resolve pandas UDF —
+            # without the pin the stage scan (and that UDF) runs 2x per
+            # round. O(round links) memory.
             typed = typed.persist()
             # numeric-lead variant (r7): deterministic buckets, no
             # boundary-sampling pass, no pinned intermediate — seqs

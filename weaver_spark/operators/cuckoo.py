@@ -24,20 +24,21 @@ driver. At 10^10 keys the shards ARE the partitions (bucket-local
 probe, no broadcast), degenerating to antijoin_copartitioned — same
 stepping stone the Bloom docstring names.
 
-Correctness guarantees mirror antijoin_bloom: the filter only routes
-DEFINITELY-NEW rows around the authoritative exact anti-join, so false
-positives cost a join probe, never a wrong result. Two cuckoo-specific
-hazards are closed conservatively:
+A probe never emits a false negative, so a maybe-seen answer is the
+only answer a present key can get. The anti-join itself does not probe
+the filter (``antijoin_cuckoo`` is the exact anti-join, for the reason
+``antijoin_bloom`` gives). Two cuckoo-specific hazards are closed
+conservatively:
 
 - **saturation**: if a shard's kick loop overflows at build time, that
   shard is marked saturated and every probe landing in it reports
-  maybe-seen (exact-confirmed). Correct at any load factor.
+  maybe-seen. Correct at any load factor.
 - **deletion aliasing**: deleting key A may remove a fingerprint that a
   colliding key B shares (the classic cuckoo-delete caveat — a false
   NEGATIVE, which a prefilter must never emit). ``delete`` therefore
   marks the touched (shard, bucket) pairs dirty; probes hitting a dirty
-  bucket report maybe-seen and fall through to the exact join. Deletes
-  stay O(1), exactness is unconditional.
+  bucket report maybe-seen. Deletes stay O(1), and no present key ever
+  probes definitely-new.
 """
 
 from __future__ import annotations
@@ -121,7 +122,7 @@ class CuckooSeenSet:
         self.shards = shards
         self.saturated = saturated
         # deletion support: buckets whose contents were mutated by a
-        # delete — probes there must exact-confirm (see module docstring)
+        # delete — probes there answer maybe-seen (see module docstring)
         self.dirty: set[tuple[int, int]] = set()
         # sorted encoded (shard * n_buckets + bucket) view of `dirty` for
         # vectorized probing; rebuilt lazily when the set changes
@@ -453,20 +454,7 @@ def antijoin_cuckoo(
     n_shards: int = 4,
     filt: CuckooSeenSet | None = None,
 ) -> DataFrame:
-    """Cuckoo prefilter + exact confirm. Result == antijoin_exact always
-    (definitely-new rows bypass the join; maybe-seen rows are confirmed).
-    Pass a prebuilt ``filt`` to reuse/delete-maintain the filter across
-    rounds instead of rebuilding from ``seen``."""
-    spark = candidates.sparkSession
-    if filt is None:
-        filt = CuckooSeenSet.build(seen, key, expected_items, n_shards=n_shards)
-    probe = filt.might_contain_udf(spark)
-    hashed = _hash_cols(candidates, key).withColumn(
-        "_maybe_seen", probe(F.col("_bh1"), F.col("_bh2"))
-    )
-    definitely_new = hashed.where(~F.col("_maybe_seen")).drop(
-        "_bh1", "_bh2", "_maybe_seen"
-    )
-    suspects = hashed.where(F.col("_maybe_seen")).drop("_bh1", "_bh2", "_maybe_seen")
-    confirmed_new = antijoin_exact(suspects, seen, key)
-    return definitely_new.unionByName(confirmed_new)
+    """The seen anti-join of ``seen_filter='cuckoo'``: ``antijoin_exact``,
+    without a probe pass (see ``seen.antijoin_bloom``). ``filt`` and the
+    sizing arguments are unused."""
+    return antijoin_exact(candidates, seen, key)

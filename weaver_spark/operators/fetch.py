@@ -19,7 +19,8 @@ Two fetchers:
   (FIXTURES.md §3). Page content (links/image_id/caption/fmt) arrives as
   joined columns; pixels are generated deterministically from image_id on
   the executor and round-tripped through the codec — the decode work is
-  real, only the network is simulated.
+  real, only the network is simulated. Links leave this stage canonical,
+  so the engine's links pass runs no Python.
 - ``http_fetch_fn``: a real urllib-based batch fetcher with the
   reference's 5x exponential backoff. Not exercised by tests (the sandbox
   has no network) but shows the production shape: same signature, same
@@ -96,6 +97,7 @@ def make_synthetic_fetch_fn(k_cap: int | None, seed: int = 42):
                 stores = pdf["_store"].eq(True).to_numpy(dtype=bool)
             else:
                 stores = np.ones(n, dtype=bool)
+            root_links: dict[int, list] = {}
             for i in range(n):
                 t0 = time.perf_counter()
                 kind = kinds[i]
@@ -103,7 +105,7 @@ def make_synthetic_fetch_fn(k_cap: int | None, seed: int = 42):
                     links = list(links_col[i]) if links_col[i] is not None else []
                     if k_cap is not None:
                         links = links[:k_cap]
-                    out["links"][i] = links
+                    root_links[i] = links
                 elif kind == "leaf":
                     iid = image_ids[i]
                     out["image_id"][i] = iid
@@ -119,6 +121,15 @@ def make_synthetic_fetch_fn(k_cap: int | None, seed: int = 42):
                         out["sink"][i] = "p"
                 # kind None (404) / "dummy": nothing extracted
                 out["fetch_ms"][i] = int((time.perf_counter() - t0) * 1000)
+            if root_links:
+                # links leave the fetch canonical: one vectorized pass
+                # over every root's list in the batch (the same
+                # canonicalizer seed_urls applies at enqueue time)
+                canon = iter(canonicalize_series(pd.Series(
+                    [u for links in root_links.values() for u in links], dtype=object
+                )))
+                for i, links in root_links.items():
+                    out["links"][i] = [next(canon) for _ in links]
             res = pd.DataFrame(out)
             res["w"] = res["w"].astype("Int32")
             res["h"] = res["h"].astype("Int32")

@@ -17,8 +17,9 @@ Design for scale (SURVEY.md §7 hard part b):
   — build and probe share the exact same hash bits, and the expensive
   hashing stays in whole-stage codegen; Python only does vectorized
   numpy bit tests on Arrow batches. Rows with any unset bit are
-  DEFINITELY new and skip the exact join; possible-positives are
-  confirmed exactly. Correctness is therefore independent of the FPP.
+  DEFINITELY new. The anti-joins do not consult the filter: in a Spark
+  anti-join every candidate meets the seen side's key match anyway, so
+  a probe pass only adds a Python stage (``antijoin_bloom``).
 - **sharding**: the filter is a list of shards keyed by ``h1 % shards``.
   A single 10-bits/key filter at 10^10 keys is ~12 GB — too big to
   broadcast; shards bound per-executor memory and are the stepping stone
@@ -151,7 +152,7 @@ class BloomSeenSet:
     def over_capacity(self) -> bool:
         """Inserts exceeded the bit-count sizing — fpp is degrading and
         the owner should rebuild with more headroom. Correctness is never
-        at stake (higher fpp only routes more rows to the exact join)."""
+        at stake (higher fpp only means more maybe-seen answers)."""
         return self.n_inserted > self.capacity
 
     def _invalidate_broadcast(self) -> None:
@@ -281,19 +282,12 @@ def antijoin_bloom(
     n_shards: int = 4,
     filt: BloomSeenSet | None = None,
 ) -> DataFrame:
-    """Bloom prefilter + exact confirm. Result == antijoin_exact always;
-    the bloom only routes definitely-new rows around the join. Pass a
-    prebuilt ``filt`` to reuse the persistent cross-round filter instead
-    of rebuilding from ``seen``."""
-    spark = candidates.sparkSession
-    bloom = filt or BloomSeenSet.build(seen, key, expected_items, fpp, n_shards)
-    probe = bloom.might_contain_udf(spark)
-    hashed = _hash_cols(candidates, key).withColumn(
-        "_maybe_seen", probe(F.col("_bh1"), F.col("_bh2"))
-    )
-    definitely_new = hashed.where(~F.col("_maybe_seen")).drop(
-        "_bh1", "_bh2", "_maybe_seen"
-    )
-    suspects = hashed.where(F.col("_maybe_seen")).drop("_bh1", "_bh2", "_maybe_seen")
-    confirmed_new = antijoin_exact(suspects, seen, key)
-    return definitely_new.unionByName(confirmed_new)
+    """The seen anti-join of ``seen_filter='bloom'``: ``antijoin_exact``.
+
+    The filter is not probed. A probe cannot shrink the join — the seen
+    side is scanned in full and every candidate reaches the key match
+    either way — and routing definitely-new rows around the join costs a
+    Python pass per call. The filter arguments are accepted so callers
+    holding a filter keep one signature; ``filt`` and the sizing
+    arguments are unused."""
+    return antijoin_exact(candidates, seen, key)

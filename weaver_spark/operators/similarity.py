@@ -355,7 +355,9 @@ def knn_ivf(
     (n_cells, n_probe) exactly like (n_planes, n_tables) for knn_lsh.
 
     Ties (assignment and rank) break toward the lower cell / neighbor
-    id, matching the DuckDB oracle's ORDER BY.
+    id, matching the DuckDB oracle's ORDER BY. ``cosine`` is returned
+    unrounded so the caller rounds it once (rounding here and again in
+    the caller would turn 0.84374964 into 0.843750 and then 0.8438).
     """
     from pyspark.sql import Window
 
@@ -399,7 +401,7 @@ def knn_ivf(
     return (
         cands.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("cosine", 6).alias("cosine"))
+        .select("query_id", "neighbor_id", "rk", "cosine")
     )
 
 

@@ -70,6 +70,16 @@ def q1_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     price = F.col("l_extendedprice").cast(DEC)
     disc = F.col("l_discount").cast(DEC)
     tax = F.col("l_tax").cast(DEC)
+
+    def avg4(c):
+        # round ONCE, to 4 places from an 18-place quotient: sum / count
+        # keeps only 6 places at Spark's default decimal precision, and
+        # a second rounding to 4 flips values such as 270.52 / 5405 =
+        # 0.05004995 (-> 0.050050 -> 0.0501). An exact tie (1.001 / 20
+        # = 0.05005) still rounds half-up here, where the DuckDB oracle
+        # divides in double and may round the other way.
+        return F.round(F.sum(c).cast("decimal(38,18)") / F.count("*"), 4)
+
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -80,8 +90,8 @@ def q1_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.sum(price * (1 - disc) * (1 + tax)), 2)
             .cast("double")
             .alias("sum_charge"),
-            F.round(F.sum(qty) / F.count("*"), 4).cast("double").alias("avg_qty"),
-            F.round(F.sum(disc) / F.count("*"), 4).cast("double").alias("avg_disc"),
+            avg4(qty).cast("double").alias("avg_qty"),
+            avg4(disc).cast("double").alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
     )

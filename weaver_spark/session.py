@@ -58,10 +58,13 @@ def get_spark(
         # runs on one core of the session. The floor derives from the
         # session's parallelism (never a constant): at cluster scale the
         # natural file/row-group count of a 100 TB table is far above
-        # any core count, so the floor is inert there; splits still
-        # cannot cross parquet row groups, so the floor is also bounded
-        # by the writer's row-group size (the explicit _spread
-        # repartition in queries.py covers single-row-group inputs).
+        # any core count, so the floor is inert there. Splits still
+        # cannot cross parquet row groups, so a file with fewer row
+        # groups than the floor scans as mostly EMPTY splits: the rows
+        # sit on as many tasks as there are row groups. queries._spread
+        # does not reliably cover that case either — its guard counts
+        # splits (getNumPartitions), empty ones included, so the floor
+        # itself can switch its repartition off.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")

@@ -24,11 +24,18 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from ..engine import CrawlEngine, _canonicalize_udf
+from ..engine import CrawlEngine
+from ..functions.urls import canonicalize_series
 from ..schemas import STATUS_PENDING
 
 ENQUEUE_SCHEMA = "url STRING, url_type STRING, priority INT, ts TIMESTAMP"
+
+
+@F.pandas_udf(StringType())
+def _canonical_url(urls: pd.Series) -> pd.Series:
+    return canonicalize_series(urls)
 
 
 def read_enqueue_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
@@ -67,7 +74,7 @@ def stream_enqueue(
         state = engine.frontier.latest_state(spark)
         max_seq = state.agg(F.max("enqueue_seq").alias("m")).collect()[0]["m"]
         start = (max_seq if max_seq is not None else -1) + 1
-        canon = batch_df.withColumn("url", _canonicalize_udf(F.col("url")))
+        canon = batch_df.withColumn("url", _canonical_url(F.col("url")))
         with_seq, pin = dense_seq(canon, ["ts", "url"], start=start)
         ucid = engine.frontier.last_commit() + 1
         rows = with_seq.select(
@@ -115,7 +122,7 @@ def host_sessionize_stream(
     """
     stream = read_enqueue_stream(spark, drop_dir)
     events = stream.withColumn(
-        "host", F.parse_url(_canonicalize_udf(F.col("url")), F.lit("HOST"))
+        "host", F.parse_url(_canonical_url(F.col("url")), F.lit("HOST"))
     ).select("host", "ts")
     gap_us = gap_s * 1_000_000
 
@@ -159,7 +166,7 @@ def host_window_counts(
     watermark. Caller attaches a sink (memory table in tests)."""
     stream = read_enqueue_stream(spark, drop_dir)
     return (
-        stream.withColumn("host", F.parse_url(_canonicalize_udf(F.col("url")), F.lit("HOST")))
+        stream.withColumn("host", F.parse_url(_canonical_url(F.col("url")), F.lit("HOST")))
         .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"), "host")
         .agg(F.count("*").alias("n"))
